@@ -147,64 +147,131 @@ def parse_date_struct(col: Column) -> Column:
     return F.struct(date_out.alias("date"), error_out.alias("error"))
 
 
-_PD_TEMPS = [
-    "_pd_s", "_pd_digits", "_pd_cleaned", "_pd_empty", "_pd_nd",
-    "_pd_m", "_pd_dd", "_pd_yraw", "_pd_y", "_pd_cd", "_pd_maxd",
-    "_pd_cerr", "_pd_casc",
-] + [f"_pd_c{i}" for i in range(len(CASCADE_FORMATS))]
+#: temp columns of one parsed column (see :func:`_tmp`)
+_TEMP_NAMES = [
+    "s", "digits", "cleaned", "empty", "nd", "m", "dd", "yraw", "y",
+    "cd", "maxd", "cerr", "casc",
+] + [f"c{i}" for i in range(len(CASCADE_FORMATS))]
 
 
-def _parse_prefix(df, src_col: str):
-    """Shared normalization/positional-field prefix of the cascade, as
-    chained projections (``_pd_*`` temp columns)."""
-    c = F.col(src_col)
-    s = F.trim(c.cast("string"))
-    out = df.withColumn(
-        "_pd_s",
-        F.when(s.rlike(r"^\d+\.\d+$"), F.regexp_extract(s, r"^(\d+)\.", 1)).otherwise(s),
-    )
-    ps = F.col("_pd_s")
-    out = out.withColumns(
-        {
-            "_pd_digits": F.regexp_replace(ps, r"[^0-9]", ""),
-            "_pd_cleaned": F.regexp_replace(ps, r"[^0-9/\-]", ""),
-            "_pd_empty": ps.isNull() | (ps == ""),
-        }
-    )
-    dg = F.col("_pd_digits")
-    out = out.withColumn("_pd_nd", F.length(dg))
-    nd = F.col("_pd_nd")
-    out = out.withColumns(
-        {
-            # try_cast: these evaluate for EVERY row (not CASE-guarded
-            # like the single-expression form), so ''/overflow must null
-            # instead of throwing under the driver's ANSI session
-            "_pd_m": F.when(nd == 7, F.substring(dg, 1, 1))
-            .otherwise(F.substring(dg, 1, 2))
+def _tmp(k: int, name: str) -> str:
+    """Temp-column name ``name`` of the ``k``-th parsed column:
+    ``_pd_<name>`` for the first, ``_pd<k>_<name>`` for the others."""
+    return f"_pd{k or ''}_{name}"
+
+
+def _t(k: int, name: str) -> Column:
+    return F.col(_tmp(k, name))
+
+
+def _lockstep(df, n: int, step):
+    """One projection holding ``step(k)``'s columns for each of ``n``
+    parsed columns: n date columns cost the projections of one."""
+    return df.withColumns({name: expr for k in range(n) for name, expr in step(k).items()})
+
+
+def _digits_step(k: int) -> dict[str, Column]:
+    ps = _t(k, "s")
+    return {
+        _tmp(k, "digits"): F.regexp_replace(ps, r"[^0-9]", ""),
+        _tmp(k, "cleaned"): F.regexp_replace(ps, r"[^0-9/\-]", ""),
+        _tmp(k, "empty"): ps.isNull() | (ps == ""),
+    }
+
+
+def _ndigits_step(k: int) -> dict[str, Column]:
+    return {_tmp(k, "nd"): F.length(_t(k, "digits"))}
+
+
+def _fields_step(k: int) -> dict[str, Column]:
+    dg, nd = _t(k, "digits"), _t(k, "nd")
+    return {
+        # try_cast: these evaluate for EVERY row (not CASE-guarded
+        # like the single-expression form), so ''/overflow must null
+        # instead of throwing under the driver's ANSI session
+        _tmp(k, "m"): F.when(nd == 7, F.substring(dg, 1, 1))
+        .otherwise(F.substring(dg, 1, 2))
+        .try_cast("int"),
+        _tmp(k, "dd"): F.when(nd == 7, F.substring(dg, 2, 2))
+        .otherwise(F.substring(dg, 3, 2))
+        .try_cast("int"),
+        _tmp(k, "yraw"): F.coalesce(
+            F.when(nd == 7, F.substring(dg, 4, 4))
+            .otherwise(F.substring(dg, 5, 16))
             .try_cast("int"),
-            "_pd_dd": F.when(nd == 7, F.substring(dg, 2, 2))
-            .otherwise(F.substring(dg, 3, 2))
-            .try_cast("int"),
-            "_pd_yraw": F.coalesce(
-                F.when(nd == 7, F.substring(dg, 4, 4))
-                .otherwise(F.substring(dg, 5, 16))
-                .try_cast("int"),
-                F.lit(-1),
-            ),
-        }
-    )
-    yraw = F.col("_pd_yraw")
+            F.lit(-1),
+        ),
+    }
+
+
+def _year_step(k: int) -> dict[str, Column]:
+    yraw = _t(k, "yraw")
     # guard the 2-digit-year adjustment off the -1 overflow sentinel
     # (see parse_date_struct: -1 + 2000 would pass the range check)
-    return out.withColumn(
-        "_pd_y", F.when((yraw >= 0) & (yraw < 100), yraw + 2000).otherwise(yraw)
-    )
+    return {
+        _tmp(k, "y"): F.when((yraw >= 0) & (yraw < 100), yraw + 2000).otherwise(yraw)
+    }
 
 
-def _compact_error() -> Column:
-    """Compact-branch error renderer over ``_pd_*`` attributes."""
-    m, dd, y = F.col("_pd_m"), F.col("_pd_dd"), F.col("_pd_y")
-    cd, maxd = F.col("_pd_cd"), F.col("_pd_maxd")
+def _compact(k: int) -> Column:
+    return ~_t(k, "empty") & (_t(k, "nd") >= 6)
+
+
+def _compact_date_step(k: int) -> dict[str, Column]:
+    # branch guards: chained columns would otherwise evaluate for EVERY
+    # row (the single-expression form got laziness from CASE nesting);
+    # guarding keeps the compact branch from paying the 9-format
+    # cascade and vice versa — measured 2x on the compact-heavy mix.
+    m, dd, y = _t(k, "m"), _t(k, "dd"), _t(k, "y")
+    return {
+        _tmp(k, "cd"): F.when(
+            _compact(k),
+            F.try_to_date(F.format_string("%04d-%02d-%02d", y, m, dd), "yyyy-MM-dd"),
+        ),
+        _tmp(k, "maxd"): F.when(
+            _compact(k), F.dayofmonth(F.last_day(F.make_date(y, m, F.lit(1))))
+        ),
+    }
+
+
+def _compact_error_step(k: int) -> dict[str, Column]:
+    return {_tmp(k, "cerr"): F.when(_compact(k), _compact_error(k))}
+
+
+def _cascade_step(k: int) -> dict[str, Column]:
+    branch = ~_t(k, "empty") & (_t(k, "nd") < 6)
+    return {
+        _tmp(k, f"c{i}"): F.when(branch, F.try_to_date(_t(k, "cleaned"), fmt))
+        for i, fmt in enumerate(CASCADE_FORMATS)
+    }
+
+
+def _cascade_pick_step(k: int) -> dict[str, Column]:
+    cands = [_t(k, f"c{i}") for i in range(len(CASCADE_FORMATS))]
+    return {
+        _tmp(k, "casc"): F.coalesce(
+            *[F.when(F.year(c).between(1900, 2100), c) for c in cands]
+        )
+    }
+
+
+_PREFIX_STEPS = (_digits_step, _ndigits_step, _fields_step, _year_step)
+_PARSE_STEPS = (_compact_date_step, _compact_error_step, _cascade_step, _cascade_pick_step)
+
+
+def _parse_prefix(df, srcs: list[str]):
+    """Shared normalization/positional-field prefix of the cascade, as
+    chained projections (``_pd*_`` temp columns)."""
+    out = df.withColumns({_tmp(k, "s"): _normalized(F.col(c)) for k, c in enumerate(srcs)})
+    for step in _PREFIX_STEPS:
+        out = _lockstep(out, len(srcs), step)
+    return out
+
+
+def _compact_error(k: int = 0) -> Column:
+    """Compact-branch error renderer over the ``k``-th column's temps."""
+    m, dd, y = _t(k, "m"), _t(k, "dd"), _t(k, "y")
+    cd, maxd = _t(k, "cd"), _t(k, "maxd")
     return (
         F.when(
             (m < 1) | (m > 12),
@@ -248,12 +315,14 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
     compiles its own whole-stage method, so the janino-limit rationale
     for the union is unchanged.
 
-    The cache handle is attached to the returned frame as
-    ``_ivdp_persisted_base``; long-lived callers release it with
-    :func:`release_dead_letter_cache` after their terminal action.
+    The cache lives as long as the session's cache entry for the
+    prefix plan: build this frame once per input and reuse it (the
+    catalog memoizes it per session and corpus). The pipeline does not
+    use it: ``operators.validate`` filters the error column of one
+    parse that ``run_pipeline`` persists and releases.
     """
     orig = df.columns
-    base = _parse_prefix(df, src_col).persist(StorageLevel.MEMORY_AND_DISK)
+    base = _parse_prefix(df, [src_col]).persist(StorageLevel.MEMORY_AND_DISK)
     empty, nd = F.col("_pd_empty"), F.col("_pd_nd")
 
     b_empty = base.filter(empty).select(
@@ -314,17 +383,56 @@ def dead_letter_frame(df, src_col: str, err_name: str = "validation_error"):
             ).alias(err_name),
         )
     )
-    out = b_empty.unionByName(b_compact).unionByName(b_casc)
-    out._ivdp_persisted_base = base
-    return out
+    return b_empty.unionByName(b_compact).unionByName(b_casc)
 
 
-def release_dead_letter_cache(df) -> None:
-    """Unpersist the shared parse-prefix cache attached by
-    :func:`dead_letter_frame` (no-op for frames without one)."""
-    base = getattr(df, "_ivdp_persisted_base", None)
-    if base is not None:
-        base.unpersist()
+def with_parsed_dates(df, targets: dict[str, tuple[str, str]]):
+    """Append a parsed-date and an error column per source column,
+    ``targets = {src_col: (date_name, err_name)}``, with the cascade
+    semantics of :func:`parse_date_struct` — built as chained
+    projections that advance every column in lockstep: one
+    ``withColumns`` per step across all columns, so the plan has the
+    same 11 projections for three date columns as for one.
+
+    The single-expression form repeats the normalization/digit
+    subtrees at every use site; the generated Java method exceeds
+    janino's 64 KB limit and Spark silently falls back to interpreted
+    evaluation (~6x slower). Chained projections keep each intermediate
+    as a codegen local reused by the next step (each temp is referenced
+    more than once, so CollapseProject leaves the steps in place).
+    A filter on an error column must not be pushed into the chain (it
+    would inline the whole renderer into one predicate): filter a
+    persisted parse, as ``run_pipeline`` does, or use
+    :func:`dead_letter_frame`.
+    """
+    srcs = list(targets)
+    out = _parse_prefix(df, srcs)
+    for step in _PARSE_STEPS:
+        out = _lockstep(out, len(srcs), step)
+    results: dict[str, Column] = {}
+    for k, (date_name, err_name) in enumerate(targets.values()):
+        empty, nd = _t(k, "empty"), _t(k, "nd")
+        cd, cerr, casc = _t(k, "cd"), _t(k, "cerr"), _t(k, "casc")
+        results[date_name] = (
+            F.when(empty, F.lit(None).cast("date"))
+            .when(nd >= 6, F.when(cerr.isNull(), cd))
+            .otherwise(casc)
+        )
+        results[err_name] = (
+            F.when(empty, F.lit("Empty date string"))
+            .when(nd >= 6, cerr)
+            .otherwise(
+                F.when(
+                    casc.isNull(),
+                    F.format_string(
+                        "Unable to parse date '%s': format not recognized",
+                        _t(k, "cleaned"),
+                    ),
+                )
+            )
+        )
+    out = out.withColumns(results)
+    return out.drop(*[_tmp(k, n) for k in range(len(srcs)) for n in _TEMP_NAMES])
 
 
 def with_parsed_date(
@@ -333,89 +441,9 @@ def with_parsed_date(
     date_name: str = "parsed_date",
     err_name: str = "parse_error",
 ):
-    """Append ``date_name``/``err_name`` columns parsed from
-    ``src_col`` with the same cascade semantics as
-    :func:`parse_date_struct` — but built as chained projections.
-
-    The single-expression form repeats the normalization/digit
-    subtrees at every use site; the generated Java method exceeds
-    janino's 64 KB limit and Spark silently falls back to interpreted
-    evaluation (~6x slower). Chained projections keep each intermediate
-    as a codegen local reused by the next step (each temp is referenced
-    more than once, so CollapseProject leaves the steps in place).
-    For error-side consumers that filter on failures, prefer
-    :func:`dead_letter_frame` — the combined date+error plan is too
-    large for one compiled stage.
-    """
-    temps = _PD_TEMPS
-    out = _parse_prefix(df, src_col)
-    nd = F.col("_pd_nd")
-    yraw, m, dd = F.col("_pd_yraw"), F.col("_pd_m"), F.col("_pd_dd")
-    # branch guards: chained columns would otherwise evaluate for EVERY
-    # row (the single-expression form got laziness from CASE nesting);
-    # guarding keeps the compact branch from paying the 9-format
-    # cascade and vice versa — measured 2x on the compact-heavy mix.
-    y = F.col("_pd_y")
-    compact = ~F.col("_pd_empty") & (nd >= 6)
-    cascade_branch = ~F.col("_pd_empty") & (nd < 6)
-    out = out.withColumns(
-        {
-            "_pd_cd": F.when(
-                compact,
-                F.try_to_date(
-                    F.format_string("%04d-%02d-%02d", y, m, dd), "yyyy-MM-dd"
-                ),
-            ),
-            "_pd_maxd": F.when(
-                compact, F.dayofmonth(F.last_day(F.make_date(y, m, F.lit(1))))
-            ),
-        }
-    )
-    cd = F.col("_pd_cd")
-    out = out.withColumn("_pd_cerr", F.when(compact, _compact_error()))
-    out = out.withColumns(
-        {
-            f"_pd_c{i}": F.when(
-                cascade_branch, F.try_to_date(F.col("_pd_cleaned"), fmt)
-            )
-            for i, fmt in enumerate(CASCADE_FORMATS)
-        }
-    )
-    out = out.withColumn(
-        "_pd_casc",
-        F.coalesce(
-            *[
-                F.when(
-                    F.year(F.col(f"_pd_c{i}")).between(1900, 2100), F.col(f"_pd_c{i}")
-                )
-                for i in range(len(CASCADE_FORMATS))
-            ]
-        ),
-    )
-    empty, cerr, casc = F.col("_pd_empty"), F.col("_pd_cerr"), F.col("_pd_casc")
-    out = out.withColumns(
-        {
-            date_name: (
-                F.when(empty, F.lit(None).cast("date"))
-                .when(nd >= 6, F.when(cerr.isNull(), cd))
-                .otherwise(casc)
-            ),
-            err_name: (
-                F.when(empty, F.lit("Empty date string"))
-                .when(nd >= 6, cerr)
-                .otherwise(
-                    F.when(
-                        casc.isNull(),
-                        F.format_string(
-                            "Unable to parse date '%s': format not recognized",
-                            F.col("_pd_cleaned"),
-                        ),
-                    )
-                )
-            ),
-        }
-    )
-    return out.drop(*temps)
+    """One-column :func:`with_parsed_dates`: append ``date_name`` /
+    ``err_name`` parsed from ``src_col``."""
+    return with_parsed_dates(df, {src_col: (date_name, err_name)})
 
 
 def parse_date(col: Column) -> Column:

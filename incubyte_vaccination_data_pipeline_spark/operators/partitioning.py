@@ -6,8 +6,8 @@ from pyspark.sql import DataFrame
 
 
 def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-spread ``df`` over ``max(defaultParallelism, current
-    partitions)`` partitions keyed by ``cols``.
+    """Hash-spread ``df`` over ``spark.sql.shuffle.partitions``
+    partitions keyed by ``cols``.
 
     For explode-heavy operators (shingles, n-grams, per-char terms)
     the input bytes wildly understate the downstream work: a small
@@ -23,12 +23,14 @@ def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
     exchange count does not grow. On inputs already wider than the
     cluster (the 100 TB case) this is a no-op-sized reshuffle that
     preserves the existing parallelism.
+
+    The count is the session's setting, not the host's core count: it
+    lands in the analyzed plan, so a plan (and its fingerprint) built
+    under the same session settings is the same on every host.
+    ``session.get_spark`` sizes shuffle partitions to the cores it is
+    given, so the tuned session still spreads over every core.
     """
-    spark = df.sparkSession
-    n = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols)
 
 

@@ -990,7 +990,9 @@ def cosine_near_dup_pairs(
         norm_expr(vec_col).alias("nb"),
     )
     if block_col and salt > 1:
-        n = max(df.sparkSession.sparkContext.defaultParallelism, salt)
+        # the session's shuffle width, not the host's cores: the count
+        # lands in the analyzed plan (see partitioning.fanout_repartition)
+        n = max(int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), salt)
         a = a.withColumn("__s", F.pmod(F.hash("vec_a"), F.lit(salt)))
         b = b.withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
         keys = [block_col, "__s"]

@@ -13,10 +13,12 @@ Parity targets (reference ``src/validators/data_validator.py``):
   (``data_validator.py:282``, ``snowflake_connector.py:203,273``).
 
 Spark-first re-expression: instead of the reference's mask-and-concat,
-validation is one lazy expression tree producing parsed DATE columns
-plus an error column per mandatory date field; the quarantine and the
-clean path are two filters over the same plan (Catalyst computes the
-predicate once per row; no Python in the loop).
+validation is one lazy parse producing a DATE column plus an error
+column per date field (``parse_types``); the quarantine and the clean
+path are a filter and a projection over that one parse
+(``split_parsed``), so a caller that persists the parse pays one scan
+and one parse for both sinks (``pipeline.run_pipeline``). No Python in
+the loop.
 
 Documented divergence: the reference's ``astype(str)`` turns missing
 names into the literal string ``"nan"``, which then *passes* the
@@ -30,10 +32,7 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from incubyte_vaccination_data_pipeline_spark.functions.dates import (
-    dead_letter_frame,
-    with_parsed_date,
-)
+from incubyte_vaccination_data_pipeline_spark.functions.dates import with_parsed_dates
 from incubyte_vaccination_data_pipeline_spark.schema import (
     MANDATORY_COLUMNS,
     MANDATORY_DATE_COLUMNS,
@@ -44,6 +43,80 @@ from incubyte_vaccination_data_pipeline_spark.schema import (
     normalize_warehouse_name,
 )
 
+DATE_COLUMNS = MANDATORY_DATE_COLUMNS + OPTIONAL_DATE_COLUMNS
+
+
+def parse_types(df: DataFrame) -> DataFrame:
+    """P7 string casts plus ONE parse of every date column: each date
+    column ``c`` gains ``__date_c`` (``DateType``, NULL where
+    unparseable) and ``__err_c`` (the reason text, NULL when valid),
+    computed in lockstep (``functions/dates.with_parsed_dates``). The
+    source columns keep their raw values for the dead letter."""
+    typed = df
+    for c in STRING_COLUMNS:
+        if c in typed.columns:
+            typed = typed.withColumn(c, F.col(c).cast("string"))
+    date_cols = [c for c in DATE_COLUMNS if c in typed.columns]
+    if not date_cols:
+        return typed
+    return with_parsed_dates(typed, {c: (f"__date_{c}", f"__err_{c}") for c in date_cols})
+
+
+def split_parsed(parsed: DataFrame, columns: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(clean, dead_letter) of a :func:`parse_types` frame whose source
+    columns are ``columns``: the dead letter is a filter on the error
+    columns, the clean frame a projection of the parsed dates.
+
+    Persist ``parsed`` first (``pipeline.run_pipeline``): the two sinks
+    then share one scan and one parse, and filters on the parsed columns
+    apply to the cached rows. On an unpersisted parse, use
+    :func:`validate_types`."""
+    date_cols = [c for c in DATE_COLUMNS if f"__err_{c}" in parsed.columns]
+
+    # one record per (row, failing mandatory field), original
+    # (pre-parse) column values preserved, like the reference's copy
+    # of the still-string frame
+    dead_letters = [
+        parsed.filter(F.col(f"__err_{c}").isNotNull()).select(
+            *columns,
+            F.col(f"__err_{c}").alias("Validation_Error"),
+            F.lit(c).alias("Invalid_Field"),
+        )
+        for c in MANDATORY_DATE_COLUMNS
+        if c in date_cols
+    ]
+    if dead_letters:
+        dead_letter = dead_letters[0]
+        for dl in dead_letters[1:]:
+            dead_letter = dead_letter.unionByName(dl)
+    else:
+        dead_letter = parsed.filter(F.lit(False)).select(
+            *columns,
+            F.lit(None).cast("string").alias("Validation_Error"),
+            F.lit(None).cast("string").alias("Invalid_Field"),
+        )
+
+    clean = parsed.withColumns({c: F.col(f"__date_{c}") for c in date_cols}).drop(
+        *[f"__date_{c}" for c in date_cols], *[f"__err_{c}" for c in date_cols]
+    )
+    return clean, dead_letter
+
+
+def _fenced(parsed: DataFrame) -> DataFrame:
+    """``parsed`` with its ``__date_*``/``__err_*`` columns behind an
+    always-true, non-foldable ``rand()`` guard. Catalyst pushes a filter
+    on a parsed column down through the parse chain, inlining every
+    step into one predicate too large to compile (the stage then runs
+    interpreted); it pushes no filter through the non-deterministic
+    projection that computes the guard."""
+    kept = F.col("__fence") >= 0
+    parsed_cols = [c for c in parsed.columns if c.startswith(("__date_", "__err_"))]
+    return (
+        parsed.withColumn("__fence", F.rand(seed=0))
+        .withColumns({c: F.when(kept, F.col(c)) for c in parsed_cols})
+        .drop("__fence")
+    )
+
 
 def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Cast strings, parse dates, split into (clean, dead_letter).
@@ -52,56 +125,12 @@ def validate_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     where unparseable). ``dead_letter`` holds the original rows that
     failed a *mandatory* date parse, with ``Validation_Error`` (reason
     text) and ``Invalid_Field`` (column name) appended.
+
+    Nothing is persisted here: each action on the two frames re-reads
+    and re-parses ``df``. ``run_pipeline`` splits a persisted
+    :func:`parse_types` frame instead.
     """
-    typed = df
-    for c in STRING_COLUMNS:
-        if c in typed.columns:
-            typed = typed.withColumn(c, F.col(c).cast("string"))
-
-    # one parse per date column, as chained projections (codegen-sized
-    # steps — see functions/dates.py with_parsed_date)
-    date_cols = [c for c in MANDATORY_DATE_COLUMNS + OPTIONAL_DATE_COLUMNS if c in typed.columns]
-    parse_input = typed  # pre-parse frame: dead letters re-derive from it
-    for c in date_cols:
-        typed = with_parsed_date(typed, c, f"__date_{c}", f"__err_{c}")
-
-    mandatory_present = [c for c in MANDATORY_DATE_COLUMNS if c in df.columns]
-
-    # dead-letter: one record per (row, failing mandatory field), original
-    # (pre-parse) column values preserved, like the reference's copy of the
-    # still-string frame. stack() keeps this a single pass.
-    dead_letters = []
-    for c in mandatory_present:
-        # three-way failure-class union — each branch's plan holds only
-        # its own slice of the parser, so every stage codegen-compiles
-        # (see functions/dates.dead_letter_frame)
-        dl = (
-            dead_letter_frame(
-                parse_input.select(*df.columns), c, err_name="Validation_Error"
-            )
-            .withColumn("Invalid_Field", F.lit(c))
-        )
-        dead_letters.append(dl)
-    if dead_letters:
-        dead_letter = dead_letters[0]
-        for dl in dead_letters[1:]:
-            dead_letter = dead_letter.unionByName(dl)
-    else:
-        dead_letter = (
-            typed.filter(F.lit(False)).select(
-                *df.columns,
-                F.lit(None).cast("string").alias("Validation_Error"),
-                F.lit(None).cast("string").alias("Invalid_Field"),
-            )
-        )
-
-    clean = typed
-    for c in date_cols:
-        clean = clean.withColumn(c, F.col(f"__date_{c}"))
-    clean = clean.drop(
-        *[f"__date_{c}" for c in date_cols], *[f"__err_{c}" for c in date_cols]
-    )
-    return clean, dead_letter
+    return split_parsed(_fenced(parse_types(df)), df.columns)
 
 
 def _non_empty(col: Column) -> Column:

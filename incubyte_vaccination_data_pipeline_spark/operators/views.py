@@ -98,7 +98,8 @@ def country_view(
 
 def distinct_countries(df: DataFrame) -> list[str]:
     """A1: the bounded-cardinality country list driving view fan-out
-    (``main.py:74-81``); the only sanctioned driver-side collect."""
+    (``main.py:74-81``) — one job. ``run_pipeline`` gets the same list
+    from an ``Observation`` on its warehouse write instead."""
     rows = df.select("COUNTRY").filter(F.col("COUNTRY").isNotNull()).distinct().collect()
     return sorted(r["COUNTRY"] for r in rows)
 
@@ -108,12 +109,17 @@ def register_country_views(
     df: DataFrame,
     as_of: str | _dt.date | None = None,
     prefix: str = "VIEW_",
+    countries: list[str] | None = None,
 ) -> list[str]:
-    """Fan out one temp view per distinct country (C2 equivalent —
+    """Fan out one temp view per country (C2 equivalent —
     ``CREATE OR REPLACE VIEW VIEW_<COUNTRY>`` without the SQL-file
-    round-trip). Returns the created view names."""
+    round-trip). Returns the created view names. Registration runs no
+    job when ``countries`` is given; without it the list comes from
+    :func:`distinct_countries`."""
+    if countries is None:
+        countries = distinct_countries(df)
     names = []
-    for country in distinct_countries(df):
+    for country in countries:
         name = f"{prefix}{country.replace(' ', '_').upper()}"
         country_view(df, country, as_of=as_of).createOrReplaceTempView(name)
         names.append(name)

@@ -1,7 +1,5 @@
 from incubyte_vaccination_data_pipeline_spark.sources.csv_ingest import (  # noqa: F401
     load_source_data,
-    read_dialect_csv,
-    strip_pipe_frames,
     synonym_projection,
 )
 from incubyte_vaccination_data_pipeline_spark.sources.parquet_io import (  # noqa: F401

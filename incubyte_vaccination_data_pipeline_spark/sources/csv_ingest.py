@@ -1,4 +1,4 @@
-"""CSV dialect ingest: scan, pipe-frame strip, synonym projection.
+"""CSV dialect ingest: header probe, grouped scan, synonym projection.
 
 Parity targets in the reference (intshivam/incubyte-vaccination-data-pipeline):
 
@@ -14,21 +14,26 @@ Parity targets in the reference (intshivam/incubyte-vaccination-data-pipeline):
   (e.g. India's ``Free or Paid``) are dropped; a missing ``Country`` is
   synthesized from ``filename[:3].upper()``.
 
-Scale note: files are read individually because each carries its own
-dialect header; per-file plans union lazily via ``unionByName`` so
-Catalyst still sees one DAG. For a 100 TB ingest you would group files
-by dialect and glob each group into a single multi-file scan — the
-projection logic here is per-dialect, not per-file, so it transfers
-unchanged.
+Scale note: ingest runs no Spark job. Each file's header line and first
+data row are read through the Hadoop ``FileSystem`` on the driver (two
+lines per file, no scan), files are grouped by (header, pipe-framed),
+and each group is ONE multi-file scan with an explicit all-string
+schema built from its header — no header-inference job, no per-file
+probe. ``Source_File`` and the filename-derived ``Country`` come from
+the scan's ``_metadata.file_name``, so a group of ten thousand files is
+still one plan node. The groups union lazily via ``unionByName``; the
+union has one branch per dialect, not per file.
 """
 
 from __future__ import annotations
 
+import csv
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from incubyte_vaccination_data_pipeline_spark.schema import (
     COLUMN_MAP,
@@ -39,40 +44,105 @@ from incubyte_vaccination_data_pipeline_spark.schema import (
 
 logger = logging.getLogger(__name__)
 
-
-def read_dialect_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Read one source CSV: header row, everything as strings (no
-    inference — the validators own typing, matching the reference's
-    object-dtype reads)."""
-    return spark.read.option("header", True).option("inferSchema", False).csv(path)
+#: scan-side name of the source file name (dropped by the projection)
+_FILE = "__source_file"
 
 
-def strip_pipe_frames(df: DataFrame) -> DataFrame:
-    """Drop ``|``-framed records when the file embeds a pipe header.
+def _file_name() -> Column:
+    """The scanned file's name. ``_metadata.file_name`` is URI-encoded
+    (a space reads ``%20``); a literal ``+`` is left as is in a URI
+    path, so it is escaped before the form-style decode."""
+    return F.url_decode(
+        F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B"))
+    )
 
-    Mirrors ``data_validator.py:227-230``: detection looks at the first
-    data row only (a bounded single-row action, not a data-path
-    collect); the header record is compared to the expected layout and
-    mismatches only warn; all rows whose *first* column starts with
-    ``|`` are then filtered out distributively.
-    """
-    first = df.limit(1).collect()
-    if not first:
-        return df
-    row = first[0]
-    cells = [v for v in row if isinstance(v, str)]
-    header_cells = [v for v in cells if v.startswith("|H|")]
-    if not header_cells:
-        return df
-    header = header_cells[0]
-    if header != EXPECTED_PIPE_HEADER:
+
+def _head_lines(jvm, fs, path, n: int = 2) -> list[str]:
+    """The first ``n`` non-blank lines of ``path`` (Spark's CSV reader
+    skips blank lines, so these are its header and first data row)."""
+    reader = jvm.java.io.BufferedReader(
+        jvm.java.io.InputStreamReader(fs.open(path), "UTF-8")
+    )
+    lines: list[str] = []
+    try:
+        while len(lines) < n:
+            line = reader.readLine()
+            if line is None:
+                break
+            if line.strip():
+                lines.append(line)
+    finally:
+        reader.close()
+    if lines:  # Spark drops a UTF-8 byte-order mark before the header
+        lines[0] = lines[0].removeprefix("\ufeff")
+    return lines
+
+
+def _fields(line: str) -> list[str]:
+    return next(csv.reader([line]))
+
+
+def _safe_header(cells: list[str]) -> list[str]:
+    """Column names as Spark's CSV reader derives them from a header
+    row (``CSVUtils.makeSafeHeader``, case-insensitive session): empty
+    cells become ``_c<i>``, case-insensitive duplicates get their
+    position appended."""
+    lowered = [c.lower() for c in cells]
+    dupes = {c for c in lowered if lowered.count(c) > 1}
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if c.lower() in dupes else c
+        for i, c in enumerate(cells)
+    ]
+
+
+def _pipe_framed(header: list[str], first_row: list[str], fname: str) -> bool:
+    """S3 detection on the first data row: any cell starting ``|H|``
+    marks a pipe-framed file; its header record is compared with the
+    expected layout and a mismatch only warns."""
+    framed = [c for c in first_row[: len(header)] if c.startswith("|H|")]
+    if not framed:
+        return False
+    if framed[0] != EXPECTED_PIPE_HEADER:
         logger.warning(
-            "Header does not match expected format. Expected: %s Received: %s",
+            "Header does not match expected format in %s. Expected: %s Received: %s",
+            fname,
             EXPECTED_PIPE_HEADER,
-            header,
+            framed[0],
         )
-    first_col = df.columns[0]
-    return df.filter(~F.coalesce(df[first_col].startswith("|"), F.lit(False)))
+    return True
+
+
+def _canonical_columns(df: DataFrame) -> tuple[list[Column], list[str]]:
+    """P1/P2: one expression per canonical column present in ``df``,
+    in first-occurrence order of the source columns."""
+    exprs = []
+    processed: list[str] = []
+    for source_col in df.columns:
+        target = COLUMN_MAP.get(source_col)
+        if target is None or target in processed:
+            continue
+        sources = [s for s, t in COLUMN_MAP.items() if t == target and s in df.columns]
+        if len(sources) > 1:
+            expr = F.coalesce(*[df[s] for s in sources])
+        else:
+            expr = df[source_col]
+        exprs.append(expr.alias(target))
+        processed.append(target)
+    return exprs, processed
+
+
+def _check_columns(processed: list[str], strict: bool, fname: str | None = None) -> None:
+    """Warn on missing mandatory columns (raise when ``strict``); note
+    missing optional ones."""
+    where = f" in {fname}" if fname else ""
+    missing_mandatory = [c for c in MANDATORY_COLUMNS if c not in processed]
+    if missing_mandatory:
+        logger.warning("Missing mandatory columns%s: %s", where, missing_mandatory)
+        if strict:
+            raise ValueError(f"Missing mandatory columns{where}: {missing_mandatory}")
+    missing_optional = [c for c in OPTIONAL_COLUMNS if c not in processed]
+    if missing_optional:
+        logger.info("Missing optional columns%s: %s", where, missing_optional)
 
 
 def synonym_projection(
@@ -88,20 +158,7 @@ def synonym_projection(
     - absent ``Country`` is synthesized from the filename prefix;
     - missing mandatory columns warn (raise when ``strict``).
     """
-    exprs = []
-    processed: list[str] = []
-    for source_col in df.columns:
-        target = COLUMN_MAP.get(source_col)
-        if target is None or target in processed:
-            continue
-        sources = [s for s, t in COLUMN_MAP.items() if t == target and s in df.columns]
-        if len(sources) > 1:
-            expr = F.coalesce(*[df[s] for s in sources])
-        else:
-            expr = df[source_col]
-        exprs.append(expr.alias(target))
-        processed.append(target)
-
+    exprs, processed = _canonical_columns(df)
     out = df.select(*exprs)
 
     if "Country" not in processed and filename:
@@ -109,15 +166,28 @@ def synonym_projection(
         out = out.withColumn("Country", F.lit(country_code))
         processed.append("Country")
 
-    missing_mandatory = [c for c in MANDATORY_COLUMNS if c not in processed]
-    if missing_mandatory:
-        logger.warning("Missing mandatory columns: %s", missing_mandatory)
-        if strict:
-            raise ValueError(f"Missing mandatory columns: {missing_mandatory}")
-    missing_optional = [c for c in OPTIONAL_COLUMNS if c not in processed]
-    if missing_optional:
-        logger.info("Missing optional columns: %s", missing_optional)
+    _check_columns(processed, strict)
     return out
+
+
+def _scan_group(
+    spark: SparkSession, header: list[str], pipe: bool, paths: list[str]
+) -> DataFrame:
+    """One multi-file scan of same-dialect files, canonical columns
+    plus ``Country`` (if the dialect lacks it) and ``Source_File``."""
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in header])
+    df = (
+        spark.read.schema(schema)
+        .option("header", True)
+        .csv(paths)
+        .select("*", _file_name().alias(_FILE))
+    )
+    if pipe:
+        df = df.filter(~F.coalesce(df[header[0]].startswith("|"), F.lit(False)))
+    exprs, processed = _canonical_columns(df)
+    if "Country" not in processed:
+        exprs.append(F.upper(F.substring(F.col(_FILE), 1, 3)).alias("Country"))
+    return df.select(*exprs, F.col(_FILE).alias("Source_File"))
 
 
 def load_source_data(
@@ -125,19 +195,43 @@ def load_source_data(
 ) -> DataFrame:
     """S1+S3+P1-P3 composed over every ``*.csv`` in ``data_dir``,
     unioned by name with missing columns null-filled
-    (``pd.concat`` parity, ``main.py:59-60``)."""
-    files = sorted(
-        f for f in os.listdir(data_dir) if f.lower().endswith(".csv")
+    (``pd.concat`` parity, ``main.py:59-60``). Builds the plan without
+    running a Spark job (see the module's scale note)."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(data_dir)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        raise FileNotFoundError(f"no such directory: {data_dir}")
+    statuses = sorted(
+        (s for s in fs.listStatus(root)
+         if s.isFile() and s.getPath().getName().lower().endswith(".csv")),
+        key=lambda s: s.getPath().getName(),
     )
-    if not files:
+    if not statuses:
         raise FileNotFoundError(f"no CSV files under {data_dir}")
-    frames = []
-    for fname in files:
-        df = read_dialect_csv(spark, os.path.join(data_dir, fname))
-        df = strip_pipe_frames(df)
-        df = synonym_projection(df, filename=fname, strict=strict)
-        df = df.withColumn("Source_File", F.lit(fname))
-        frames.append(df)
+
+    groups: dict[tuple[tuple[str, ...], bool], list[str]] = {}
+    for status in statuses:
+        path = status.getPath()
+        fname = path.getName()
+        lines = _head_lines(jvm, fs, path)
+        if not lines:
+            logger.warning("Skipping empty CSV file: %s", fname)
+            continue
+        header = _safe_header(_fields(lines[0]))
+        pipe = len(lines) > 1 and _pipe_framed(header, _fields(lines[1]), fname)
+        groups.setdefault((tuple(header), pipe), []).append(path.toString())
+        # the header fixes the projection, so the column checks are
+        # per-file without reading past the header
+        processed = [COLUMN_MAP[c] for c in header if c in COLUMN_MAP]
+        _check_columns(processed + ["Country"], strict, fname)
+    if not groups:
+        raise FileNotFoundError(f"only empty CSV files under {data_dir}")
+
+    frames = [
+        _scan_group(spark, list(header), pipe, paths)
+        for (header, pipe), paths in groups.items()
+    ]
     out = frames[0]
     for df in frames[1:]:
         out = out.unionByName(df, allowMissingColumns=True)

@@ -47,12 +47,20 @@ PIP_CSV = """c1,c2,c3,c4,c5
 """
 
 
-@pytest.fixture(scope="module")
-def data_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("csvdata")
+def _write_fixtures(d):
     (d / "IND (1) 1(in).csv").write_text(IND_CSV)
     (d / "USA (1) 1(in).csv").write_text(USA_CSV)
     (d / "AUS (1) 1(Sheet1).csv").write_text(AUS_CSV)
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture(scope="module")
+def data_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("csvdata")
+    _write_fixtures(d)
     return str(d)
 
 
@@ -140,6 +148,83 @@ def test_full_pipeline_and_views(spark, data_dir, tmp_path):
 
     dead = spark.read.parquet(str(tmp_path / "dead"))
     assert dead.count() == 1
+
+
+def test_rerun_after_rewrite_reads_the_new_files(spark, tmp_path):
+    """Two runs in one session over one directory, with a CSV rewritten
+    in place between them: the second run must write the counts of the
+    new files, and neither run may leave a persisted RDD behind (a
+    cache left by the first run would serve its rows to the second).
+    Other tests share the session and its caches, so the check is that
+    a run adds no persisted RDD."""
+    d = tmp_path / "csv"
+    d.mkdir()
+    _write_fixtures(d)
+
+    def run(i):
+        wh, dl = tmp_path / f"wh{i}", tmp_path / f"dl{i}"
+        before = _persisted_rdd_ids(spark)
+        run_pipeline(
+            spark, str(d), warehouse_path=str(wh), dead_letter_path=str(dl),
+            as_of="2024-06-01", load_date="2024-06-01 00:00:00",
+        )
+        assert _persisted_rdd_ids(spark) - before == set()
+        return spark.read.parquet(str(wh)).count(), spark.read.parquet(str(dl)).count()
+
+    # 9 rows, one bad Open_Date (AUS 2021-13-13)
+    assert run(0) == (8, 1)
+    # every AUS Open_Date made bad: 6 warehouse rows, 3 dead letters
+    (d / "AUS (1) 1(Sheet1).csv").write_text(
+        AUS_CSV.replace("05/11/2022", "2022-13-01").replace("03/12/2022", "99/99/2022")
+    )
+    assert run(1) == (6, 3)
+
+
+def test_pipeline_job_budget(spark, data_dir, tmp_path, monkeypatch):
+    """Jobs per phase of one run_pipeline pass, counted by job group:
+    ingest, parse and view registration run none, each write runs
+    one, so the pass runs exactly its two write jobs. The run counts
+    and the country list ride on the writes as Observations."""
+    import uuid
+
+    from incubyte_vaccination_data_pipeline_spark import pipeline
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+
+    def in_group(phase, fn):
+        def wrapped(*args, **kwargs):
+            sc.setJobGroup(f"{tag}-{phase}", phase)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup(f"{tag}-rest", "rest")
+        return wrapped
+
+    def jobs(phase):
+        return len(sc.statusTracker().getJobIdsForGroup(f"{tag}-{phase}"))
+
+    phases = ["load_source_data", "write_dead_letter", "write_warehouse",
+              "register_country_views"]
+    for name in phases:
+        monkeypatch.setattr(pipeline, name, in_group(name, getattr(pipeline, name)))
+    sc.setJobGroup(f"{tag}-rest", "rest")
+    try:
+        _, views = pipeline.run_pipeline(
+            spark, data_dir, warehouse_path=str(tmp_path / "wh"),
+            dead_letter_path=str(tmp_path / "dl"), as_of="2024-06-01",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(views) == ["VIEW_AUS", "VIEW_IND", "VIEW_USA"]
+    assert {p: jobs(p) for p in phases + ["rest"]} == {
+        "load_source_data": 0,
+        "write_dead_letter": 1,
+        "write_warehouse": 1,
+        "register_country_views": 0,
+        "rest": 0,
+    }
 
 
 def test_dedup_latest_keeps_most_recent(spark):
